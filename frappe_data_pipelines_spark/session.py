@@ -70,6 +70,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning stays at
+        # Spark's default (off), so AQE does not coalesce the final shuffle
+        # of a persisted plan: a persisted 20-document frame keeps 32
+        # partitions and each Python stage over it runs 32 tasks. Turning it
+        # on cut those to 1-3 tasks (perfbench ingest batch p50 -44% instead
+        # of -19%, local[4]), but the leaner set-up left serve's first reads
+        # ~25% slower (JVM less warm; later reads were as fast), so it is
+        # not set here.
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # --- Arrow for every pandas UDF / applyInPandas hop ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

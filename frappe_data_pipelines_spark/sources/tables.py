@@ -114,7 +114,19 @@ def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     has thousands of ≥128 MB partitions (``getNumPartitions >= target``),
     so no shuffle is ever added where the data is large — the helper only
     fires where the input is small enough that shuffling it is trivially
-    cheap."""
+    cheap.
+
+    Post-shuffle inputs are left to AQE and returned unchanged: an
+    adaptive plan (one with an exchange, or a read of a cached plan that
+    had one) picks its partition count at run time, and asking it for
+    ``getNumPartitions`` EXECUTES every upstream query stage just to build
+    the frame — at the ingest door that ran extraction, PII redaction and
+    the scrub once here and again at the caller's action. Deciding on the
+    plan's class needs no job; only shuffle-free plans, whose partition
+    count is a file/split listing, are probed."""
+    plan = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -86,6 +86,30 @@ class TestSearchService:
         assert rel == sorted(rel, reverse=True)
         assert all(0.0 <= x <= 1.0 for x in rel)
 
+    def test_rerank_with_doc_id_payload_beside_id_col(self, spark):
+        """Vectors keyed by ``vec_id`` that also carry a ``doc_id`` payload:
+        the corpus is keyed by the vector id under ``doc_id``, so the
+        payload must not make the rerank join's key ambiguous."""
+        vecs = spark.createDataFrame(
+            [(100 * d + c, d, [float(d), float(c) + 1.0]) for d in range(1, 4) for c in range(3)],
+            "vec_id long, doc_id long, embedding array<double>",
+        )
+        corpus = vecs.select(
+            F.col("vec_id").alias("doc_id"),
+            F.concat(F.lit("fast join chunk "), F.col("vec_id").cast("string")).alias("text"),
+        )
+
+        class FixedEmbedder:
+            def embed(self, texts):
+                return [[1.0, 1.0] for _ in texts]
+
+        svc = SearchService(vectors=vecs, corpus=corpus, id_col="vec_id",
+                            embedder=FixedEmbedder())
+        hits = svc.search("fast join", top_k=4, use_reranker=True).collect()
+        assert len(hits) == 4
+        assert all(r["doc_id"] == r["vec_id"] for r in hits)
+        assert [r["relevance"] for r in hits] == [1.0] * 4
+
     def test_hybrid_rrf(self, svc):
         hits = svc.hybrid_search("fast join table scan", top_k=10).collect()
         assert len(hits) == 10
@@ -210,6 +234,36 @@ class TestPipelineEngine:
 
         with _pytest.raises(ValueError, match="carry text"):
             bare.scrub_incoming(new)
+
+    def test_door_runs_the_batch_once(self, engine, spark):
+        """A queue worker's door: the batch comes out of a Python kernel,
+        is scrubbed, screened, and the screen is joined back onto the scrub
+        before one collect. The kernel must run once per row, however many
+        times the door reads the batch."""
+        corpus_text = engine.files.filter("doc_id = 2").first()["text"]
+        raw = spark.createDataFrame(
+            [(9001 + i, f"upload {i} >> {corpus_text[:60]} << tail {i}") for i in range(6)],
+            "doc_id long, text string",
+        )
+        rows_seen = spark.sparkContext.accumulator(0)
+
+        def kernel(batches):
+            for pdf in batches:
+                rows_seen.add(len(pdf))
+                yield pdf
+
+        batch = raw.mapInPandas(kernel, raw.schema)
+        scrub = engine.scrub_incoming(batch, min_len=40)
+        terms = spark.createDataFrame([(1, "upload 3 ")], "term_id long, term string")
+        screen = engine.screen_incoming(
+            scrub.select("doc_id", F.col("cleaned_text").alias("text")), terms
+        )
+        door = scrub.join(screen.select("doc_id", "blocked"), "doc_id").collect()
+        assert rows_seen.value == 6
+        assert len(door) == 6
+        assert {r.doc_id for r in door if r.blocked} == {9004}
+        assert all(corpus_text[:60] not in r.cleaned_text for r in door)
+        engine.release_caches()
 
     def test_scrub_incoming_disk_cache_survives_engine_restart(
         self, engine, spark, sf_dir, tmp_path, monkeypatch

@@ -1,11 +1,22 @@
-"""Format-generic sources/sinks (load_any/write_any) round-trips."""
+"""Format-generic sources/sinks (load_any/write_any) round-trips, and
+``spread_scan``'s no-hidden-execution rule."""
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from frappe_data_pipelines_spark.sources.tables import load_any, load_table, write_any
+from frappe_data_pipelines_spark.sources.tables import (
+    load_any,
+    load_table,
+    spread_scan,
+    write_any,
+)
+
+PACKAGE = Path(__file__).resolve().parents[1] / "frappe_data_pipelines_spark"
 
 SCHEMA = "doc_id BIGINT, lang STRING, n_chars BIGINT"
 
@@ -218,3 +229,70 @@ class TestWarcFuzz:
             for _ in range(rng.randrange(1, 6)):
                 b[rng.randrange(len(b))] = rng.randrange(256)
             parse_warc(bytes(b))  # any output is fine; raising is not
+
+
+def _jobs_started(spark, group: str, fn):
+    """(result of ``fn()``, ids of the Spark jobs it started) — counted
+    under a job group once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSpreadScan:
+    def test_post_shuffle_frame_starts_no_job(self, spark):
+        """An adaptive plan is left to AQE: asking it for its partition
+        count would execute every upstream stage just to build the frame."""
+        agg = (
+            spark.range(0, 1000, numPartitions=4)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .agg(F.count("*").alias("n"))
+        )
+        out, jobs = _jobs_started(spark, "spread-scan-post-shuffle", lambda: spread_scan(agg))
+        assert jobs == []
+        assert out is agg
+        # the same probe does see a job when one runs
+        _, jobs = _jobs_started(spark, "spread-scan-control", agg.count)
+        assert jobs
+
+    def test_one_partition_leaf_scan_is_spread(self, spark, tmp_path):
+        path = str(tmp_path / "one_file")
+        spark.range(0, 100).coalesce(1).write.parquet(path)
+        leaf = spark.read.parquet(path)
+        assert leaf.rdd.getNumPartitions() == 1
+        target = spark.sparkContext.defaultParallelism
+        out, jobs = _jobs_started(spark, "spread-scan-leaf", lambda: spread_scan(leaf))
+        assert jobs == []
+        assert out.rdd.getNumPartitions() == target
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
+def test_no_rdd_access_in_package():
+    """``DataFrame.rdd`` executes an adaptive plan's upstream stages, so a
+    stray ``.rdd`` is a hidden job. The one allowed access is
+    ``spread_scan``'s probe, behind its AdaptiveSparkPlanExec early return."""
+    found = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(f.read_text(), str(f))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "rdd":
+                found.append((f.relative_to(PACKAGE).as_posix(), node.lineno))
+    tables = PACKAGE / "sources" / "tables.py"
+    fn = next(
+        n for n in ast.walk(ast.parse(tables.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "spread_scan"
+    )
+    guard = next(
+        st for st in fn.body
+        if isinstance(st, ast.If)
+        and "AdaptiveSparkPlanExec" in ast.unparse(st.test)
+        and isinstance(st.body[0], ast.Return)
+    )
+    assert [path for path, _ in found] == ["sources/tables.py"], found
+    assert fn.lineno < guard.lineno < found[0][1] <= fn.end_lineno
